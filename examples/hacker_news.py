@@ -11,9 +11,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))  # run from anywhere
 
 from nipper_spark import Document
+from nipper_spark.sources.synthetic import reference_page
 
-html = open("/root/reference/test-pages/hacker_news.html",
-            encoding="utf-8").read()
+html = open(reference_page("hacker_news.html"), encoding="utf-8").read()
 document = Document.from_html(html)
 
 # kernel form — line-for-line the reference example

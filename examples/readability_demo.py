@@ -7,12 +7,10 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))  # run from anywhere
 
-import sys
-
 from nipper_spark.functions.readability import extract_article
+from nipper_spark.sources.synthetic import reference_page
 
-path = sys.argv[1] if len(sys.argv) > 1 else \
-    "/root/reference/test-pages/wisburg.html"
+path = sys.argv[1] if len(sys.argv) > 1 else reference_page("wisburg.html")
 rec = extract_article(open(path, encoding="utf-8").read())
 print("title:", rec["title"])
 print("author:", rec["author"])

@@ -6,8 +6,8 @@ fused extraction UDF:
     frontier(r) ──select_wave──▶ wave ─┬─▶ schedule(r)   [ordering record]
         │residual                      │broadcast-join pages ("fetch")
         │                              ▼
-        │                       extract (fused Arrow UDF)
-        │                              │ explode outlinks
+        │                       extract (one mapInPandas: an
+        │                              │ outlink row + its host keys)
         │                              ▼
         │                    candidates (min depth, max score per url)
         │                              │ robots + depth cap
@@ -31,7 +31,8 @@ Scale notes (the parts that must survive 1000 executors / 10^10 URLs):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import re
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -40,11 +41,12 @@ from pyspark.sql import functions as F
 from nipper_spark.crawl import bloom as B
 from nipper_spark.crawl import cuckoo as CK
 from nipper_spark.crawl.politeness import (
-    CrawlPolicy, _maybe_broadcast, budgets_df, robots_filter,
-    wave_order, wave_order_specs, wave_rank)
+    CrawlPolicy, _maybe_broadcast, budgets_df, policy_rules_rows,
+    robots_filter, rules_df_from_policy, wave_order, wave_order_specs,
+    wave_rank)
 from nipper_spark.crawl.state import (
     BLOOM_SCHEMA, FRONTIER_SCHEMA, ROUND_LOG_SCHEMA, SCHEDULE_SCHEMA,
-    SEEN_SCHEMA, CrawlState)
+    SEEN_SCHEMA, CrawlState, local_table)
 from nipper_spark.crawl.sitemaps import crawl_extract_outlinks
 from nipper_spark.functions.url import (HOST_RE_SQL, canonicalize_url, host_bucket, host_of, url_hash64)
 from nipper_spark.operators.cumsum import row_sequence
@@ -75,33 +77,28 @@ def _obs_long(obs, key: str, fallback) -> int:
 
 
 def _host_cols(df: DataFrame, policy: CrawlPolicy) -> DataFrame:
-    """Derive host (native regexp — canonical URLs have lowercase
-    hosts, no UDF needed) + host_bucket/url_hash in ONE vectorized
-    pandas UDF (one Python boundary, not two) sharing the oracle's
-    exact hash functions."""
+    """Derive ``host``/``host_bucket``/``url_hash`` in ONE vectorized
+    pandas UDF through :func:`outlink_keys` — the single definition of
+    a URL's keys, which a round's extraction crossing applies to its
+    candidates too. For seed and side tables."""
     n = policy.n_buckets
 
-    @F.pandas_udf("struct<host_bucket:int, url_hash:long>")
-    def _keys(host: pd.Series, url: pd.Series) -> pd.DataFrame:
-        # hosts repeat heavily within a batch (a crawl wave is a few
-        # hundred hosts): one blake2b per UNIQUE host, not per row
-        bcache: dict[str, int] = {}
-        buckets = []
-        for h in host:
-            b = bcache.get(h)
-            if b is None:
-                b = host_bucket(h, n)
-                bcache[h] = b
+    @F.pandas_udf("struct<host:string, host_bucket:int, url_hash:long>")
+    def _keys(url: pd.Series) -> pd.DataFrame:
+        hosts, buckets, hashes = [], [], []
+        for u in url:
+            host, b, uh = outlink_keys(u, n)
+            hosts.append(host)
             buckets.append(b)
+            hashes.append(uh)
         return pd.DataFrame({
+            "host": pd.Series(hosts, dtype=object),
             "host_bucket": pd.Series(buckets, dtype="int32"),
-            "url_hash": pd.Series(
-                [url_hash64(u) for u in url], dtype="int64")})
+            "url_hash": pd.Series(hashes, dtype="int64")})
 
     return (df
-            .withColumn("host", F.regexp_extract("url",
-                                                 HOST_RE_SQL, 1))
-            .withColumn("_k", _keys("host", "url"))
+            .withColumn("_k", _keys("url"))
+            .withColumn("host", F.col("_k.host"))
             .withColumn("host_bucket", F.col("_k.host_bucket"))
             .withColumn("url_hash", F.col("_k.url_hash"))
             .drop("_k"))
@@ -131,13 +128,18 @@ class FrontierEngine:
         else:
             self._budgets = budgets
             self._budgets_rows = budgets.count()
+        # the rules TABLE handed in (None = the dict policy is the
+        # robots authority, see bootstrap) and the table every round
+        # joins: the given one, or the dicts converted ONCE here into a
+        # JVM local relation (None when there are no rules at all)
+        self._rules = rules
         if rules is None:
-            self._rules = None  # robots_filter builds from dicts (or skips)
-            from nipper_spark.crawl.politeness import policy_rules_rows
             self._rules_rows = policy_rules_rows(policy)
+            self._round_rules = rules_df_from_policy(spark, policy) \
+                if policy.robots_disallow or policy.robots_allow else None
         else:
-            self._rules = rules
             self._rules_rows = rules.count()
+            self._round_rules = rules
         # in-memory twins of COMMITTED state tables, keyed by round:
         # round r+1's read of a table this engine instance just wrote
         # (and committed) reuses the localCheckpoint blocks backing the
@@ -214,12 +216,13 @@ class FrontierEngine:
                          0, float(score), 0))
         self._carry.clear()
         self._bloom_driver = None
-        frontier = (self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
+        frontier = (local_table(self.spark, rows, FRONTIER_SCHEMA)
                     .repartition(pol.n_buckets, "host_bucket")
                     .sortWithinPartitions("depth", F.desc("score"), "url")
                     .localCheckpoint(eager=False))
         self.state.write("frontier", 0, frontier)
-        seen = self.spark.createDataFrame(
+        seen = local_table(
+            self.spark,
             [(u, b, url_hash64(u), 0) for (u, h, b, d, s, r) in rows],
             SEEN_SCHEMA)
         self.state.write("seen", 0, seen)
@@ -235,7 +238,7 @@ class FrontierEngine:
                                     pol.bloom_bits_per_key)
             payloads = [(b, B.bloom_build(urls, m_bits), len(urls))
                         for b, urls in sorted(by_bucket.items())]
-        bloom_df = self.spark.createDataFrame(payloads, BLOOM_SCHEMA)
+        bloom_df = local_table(self.spark, payloads, BLOOM_SCHEMA)
         self.state.write("bloom", 0, bloom_df)
         self.state.commit_round(-1)
         self._carry["frontier"] = (0, frontier)
@@ -267,7 +270,7 @@ class FrontierEngine:
                       F.max("score").alias("score"))
                  .withColumn("discovered_round", F.lit(0).cast("int")))
         seeds = _host_cols(seeds, pol)
-        seeds = robots_filter(seeds, pol, rules=self._rules,
+        seeds = robots_filter(seeds, pol, rules=self._round_rules,
                               rules_rows=self._rules_rows).cache()
         frontier = (seeds
                     .select("url", "host", "host_bucket", "depth",
@@ -278,7 +281,7 @@ class FrontierEngine:
         self.state.write("seen", 0, seeds.select(
             "url", "host_bucket", "url_hash",
             F.lit(0).alias("round")))
-        empty_bloom = self.spark.createDataFrame([], BLOOM_SCHEMA)
+        empty_bloom = local_table(self.spark, [], BLOOM_SCHEMA)
         payloads = (seeds.groupBy("host_bucket")
                     .cogroup(empty_bloom.groupBy("host_bucket"))
                     .applyInPandas(_make_merge_fn(pol.filter_kind),
@@ -307,11 +310,19 @@ class FrontierEngine:
                   wave_bound: int | None = None) -> RoundStats:
         """One batch round. Counter discipline: every lineage counter
         rides an Observation on a write we run anyway (the free-counter
-        pattern, SURVEY.md §2.9) — a round costs ~6 Spark jobs total,
-        not one job per statistic, so per-round fixed latency stays flat
-        as cluster size grows. ``known_nonempty`` skips the emptiness
-        probe job when the caller already proved it (previous round's
-        frontier_next > 0)."""
+        pattern, SURVEY.md §2.9), not one job per statistic, so
+        per-round fixed latency stays flat as cluster size grows. A
+        round of the ``crawl`` benchmark (perfbench/README.md) runs 23
+        Spark jobs (traced median, local[3] on a 4-CPU box): the state
+        writes and their checkpoint materializations, the wave, the
+        fetch→extract→probe chain, the counters, the bloom mirror
+        refresh and the compaction. Driver-held tables are JVM local
+        relations, so the round's only Python tasks are the extraction
+        crossing and the bloom probe/merge. ``known_nonempty``
+        skips the emptiness probe job when the caller already proved it
+        (previous round's frontier_next > 0)."""
+        from concurrent.futures import ThreadPoolExecutor
+
         from pyspark.sql import Observation
 
         st, pol = self.state, self.policy
@@ -331,22 +342,9 @@ class FrontierEngine:
         if not known_nonempty and bound == 0:
             # terminal round: a zero-task plan emits no observation
             # metrics, so handle it before attaching observers
-            bloom_df = self._read_state("bloom", r, BLOOM_SCHEMA)
-            st.write("schedule", r,
-                     self.spark.createDataFrame([], SCHEDULE_SCHEMA))
-            st.write("frontier", r + 1, frontier)
-            st.write("seen", r + 1,
-                     self.spark.createDataFrame([], SEEN_SCHEMA))
-            st.write("bloom", r + 1, bloom_df)
-            st.write_rows("round_log", r, self._log_rows(r, stats, []),
-                          ROUND_LOG_SCHEMA)
-            st.commit_round(r)
-            self._carry["frontier"] = (r + 1, frontier)
-            self._carry["bloom"] = (r + 1, bloom_df)
-            if self._bloom_driver is not None \
-                    and self._bloom_driver[0] == r:
-                self._bloom_driver = (r + 1, self._bloom_driver[1])
-            return stats
+            return self._idle_round(
+                r, stats, frontier,
+                local_table(self.spark, [], SCHEDULE_SCHEMA))
 
         big_wave = bound > pol.broadcast_wave_threshold
 
@@ -399,249 +397,281 @@ class FrontierEngine:
                 "url", "host", "depth", "score")
 
         if stats.scheduled == 0:
+            return self._idle_round(r, stats, frontier, schedule)
+
+        # round-scoped resources, released on every exit path: the
+        # schedule-write thread (joined, so no write outlives a failed
+        # round), the broadcast mirror payloads and the probe cache
+        sched_pool = ThreadPoolExecutor(max_workers=1)
+        bc_payloads = None
+        probed = None
+        try:
+            # the schedule write is small once the wave is materialized;
+            # run it on a driver thread while THIS thread builds and
+            # writes the heavyweight frontier chain. Joined before
+            # commit_round.
+            sched_write = sched_pool.submit(st.write, "schedule", r,
+                                            schedule)
+
+            # "fetch" = join the wave against the big pages scan
+            # (broadcast while the wave bound allows; shuffle join above
+            # the threshold so the driver never holds an unbounded
+            # wave). depth/score ride the fetch join and pass THROUGH
+            # the extraction crossing, so the outlinks need no second
+            # wave join (pages ⋈ wave is 1:1 on url).
+            obs_fetch = Observation()
+            fetched = (self.pages.join(
+                _wave_side(wave.select("url", "depth", "score")), "url")
+                .select("url", "html", "depth", "score")
+                .observe(obs_fetch, F.count(F.lit(1)).alias("n")))
+            # one fused Python crossing: HTML pages → a[href] outlinks
+            # (priority null); sitemap-pattern URLs → parse_sitemap
+            # entries (advertised pages AND child sitemaps, with
+            # priorities) — the recursion that follows a sitemapindex
+            # chain across rounds. Each outlink leaves the crossing
+            # with its host keys already computed. Shared kernel
+            # crawl_extract_outlinks == the oracle's.
+            links = _crawl_extract(fetched, pol.n_buckets,
+                                   respect_nofollow=pol.respect_nofollow)
+            # host/host_bucket/url_hash are functions of url, so they
+            # join the grouping key without changing the groups
+            cand = (links
+                    .select("url", "host", "host_bucket", "url_hash",
+                            (F.col("depth") + 1).alias("depth"),
+                            # sitemap-advertised priority wins over
+                            # decay — the advertisement is the better
+                            # signal
+                            F.coalesce(
+                                F.col("prio"),
+                                F.col("score") * pol.score_decay)
+                            .alias("score"))
+                    .groupBy("url", "host", "host_bucket", "url_hash")
+                    .agg(F.min("depth").alias("depth"),
+                         F.max("score").alias("score")))
+            cand = robots_filter(cand, pol, rules=self._round_rules,
+                                 rules_rows=self._rules_rows).filter(
+                F.col("depth") <= pol.max_depth)
+
+            # bloom prefilter. Two size-guarded regimes, identical
+            # results (both route through the same bloom/cuckoo probe
+            # kernels):
+            # - driver-mirrored state under broadcast_bloom_bytes: the
+            #   payload dict broadcasts and the probe is a column UDF
+            #   over the candidates IN PLACE — no candidate exchange, no
+            #   state exchange, no cogroup stage;
+            # - above the guard (10^10-URL regime): bucket-cogrouped
+            #   probe, state and candidates sharing the host_bucket
+            #   partitioning.
             bloom_df = self._read_state("bloom", r, BLOOM_SCHEMA)
-            st.write("schedule", r, schedule)
-            st.write("frontier", r + 1, frontier)
-            st.write("seen", r + 1,
-                     self.spark.createDataFrame([], SEEN_SCHEMA))
-            st.write("bloom", r + 1, bloom_df)
-            st.write_rows("round_log", r, self._log_rows(r, stats, []),
-                          ROUND_LOG_SCHEMA)
+            bdrv = self._bloom_driver \
+                if self._bloom_driver is not None \
+                and self._bloom_driver[0] == r else None
+            obs_probe = Observation()
+            if bdrv is not None:
+                bc_payloads = _sc.broadcast(bdrv[1])
+                probed = cand.withColumn(
+                    "bloom_hit",
+                    _broadcast_probe_udf(bc_payloads, pol.filter_kind)(
+                        "host_bucket", "url"))
+            else:
+                probed = (cand.groupBy("host_bucket")
+                          .cogroup(bloom_df.groupBy("host_bucket"))
+                          .applyInPandas(
+                              _make_probe_fn(pol.filter_kind), schema=(
+                                  "url string, depth int, score double, "
+                                  "host string, host_bucket int, "
+                                  "url_hash long, bloom_hit boolean")))
+            probed = (probed
+                      .observe(obs_probe,
+                               F.count(F.lit(1)).alias("candidates"),
+                               F.sum(F.col("bloom_hit").cast("long"))
+                               .alias("hits"))
+                      # cache: both union branches below must share ONE
+                      # materialization, or the observe node (and the
+                      # whole fetch→extract chain above it) executes
+                      # twice and the observation receives duplicate
+                      # metric rows
+                      .cache())
+            maybe_seen = probed.filter("bloom_hit").drop("bloom_hit")
+            definitely_new = probed.filter("NOT bloom_hit") \
+                .drop("bloom_hit")
+
+            # exact authority: only bloom-hits pay the anti-join shuffle
+            seen = st.read_all_rounds("seen", r, SEEN_SCHEMA)
+            confirmed_new = maybe_seen.join(
+                seen.select("url"), "url", "left_anti")
+            # localCheckpoint, not cache: the four downstream consumers
+            # (frontier/seen/bloom writes + per-bucket counters) then
+            # analyze a LEAF plan instead of re-canonicalizing the whole
+            # fetch→extract→probe→anti-join tree once per query. Eager:
+            # materializes the heavy chain exactly once and resolves the
+            # fetch/probe observations. The checkpointed table is
+            # fresh-delta-sized; blocks free with the reference.
+            _sc.setJobDescription(
+                f"round {r}: fetch+extract+probe+antijoin")
+            fresh = definitely_new.unionByName(confirmed_new) \
+                .localCheckpoint(eager=True)
+
+            obs_residual = Observation()
+            residual = residual.observe(
+                obs_residual, F.count(F.lit(1)).alias("n"))
+            # the frontier IS the priority queue: host-bucketed files,
+            # each internally (depth, -score, url)-ordered, so the next
+            # round's per-host top-k scans presorted bucket-local data.
+            # Lazy localCheckpoint: the write job below materializes the
+            # blocks, and round r+1's frontier read then reuses them via
+            # the carry (set only after commit) instead of re-scanning
+            # the parquet this round just wrote
+            next_frontier = (residual.unionByName(
+                fresh.select("url", "host", "host_bucket", "depth",
+                             "score",
+                             F.lit(r + 1).alias("discovered_round")))
+                .repartition(pol.n_buckets, "host_bucket")
+                .sortWithinPartitions("depth", F.desc("score"), "url")
+                .localCheckpoint(eager=False))
+
+            # ONE collect over the checkpointed fresh delta yields the
+            # per-bucket counters AND the total (their sum). The
+            # frontier write, seen write and bloom merge+write remain
+            # independent consumers run as concurrent jobs from driver
+            # threads: the frontier's repartition+sort+write overlaps
+            # the bloom merge instead of preceding it. commit_round only
+            # after every write joined — a failed write raises out of
+            # result() and the uncommitted round replays on resume.
+            _sc.setJobDescription(f"round {r}: per-bucket fresh counters")
+            per_bucket = [(row["host_bucket"], row["n"]) for row in
+                          fresh.groupBy("host_bucket").agg(
+                              F.count("*").alias("n")).collect()]
+            _sc.setJobDescription(None)
+            stats.fresh = sum(n for _, n in per_bucket)
+            stats.fetched = _obs_long(obs_fetch, "n", fetched.count)
+            stats.candidates = _obs_long(obs_probe, "candidates",
+                                         probed.count)
+            stats.bloom_hits = _obs_long(
+                obs_probe, "hits",
+                lambda: probed.filter("bloom_hit").count())
+
+            # bloom |= fresh, per bucket. The cogroup emits every bucket
+            # key present on either side, so it alone produces exactly
+            # one row per bucket: fresh-only → new payload, both →
+            # merged, bloom-only → old payload echoed.
+            if bdrv is not None:
+                # buckets that received fresh keys merge against the
+                # broadcast payloads (one exchange: the fresh groupBy);
+                # untouched buckets echo their carried rows — the same
+                # one-row-per-present-bucket output the cogroup produces
+                touched = [int(b) for b, _ in per_bucket]
+                merged = (fresh.groupBy("host_bucket")
+                          .applyInPandas(
+                              _make_broadcast_merge_fn(bc_payloads,
+                                                       pol.filter_kind),
+                              schema=BLOOM_SCHEMA))
+                untouched = bloom_df.filter(
+                    ~F.col("host_bucket").isin(touched)) if touched \
+                    else bloom_df
+                new_bloom = merged.unionByName(untouched) \
+                    .localCheckpoint(eager=False)
+                # the mirror refresh needs the new state's total payload
+                # size BEFORE it collects anything: it rides the bloom
+                # write (the job that materializes the checkpoint) as an
+                # Observation
+                obs_bloom = Observation()
+                bloom_write = new_bloom.observe(
+                    obs_bloom, F.sum(F.length("payload")).alias("bytes"))
+            else:
+                new_bloom = (fresh.groupBy("host_bucket")
+                             .cogroup(bloom_df.groupBy("host_bucket"))
+                             .applyInPandas(
+                                 _make_merge_fn(pol.filter_kind),
+                                 schema=BLOOM_SCHEMA)
+                             .localCheckpoint(eager=False))
+                bloom_write = new_bloom
+            # the seen table is sharded by host bucket like every other
+            # state table: one file per bucket per round instead of one
+            # per fresh-delta partition — the cumulative anti-join scan
+            # lists n_buckets files per round, not O(shuffle partitions)
+            seen_delta = fresh.select(
+                "url", "host_bucket", "url_hash",
+                F.lit(r + 1).alias("round")) \
+                .repartition(pol.n_buckets, "host_bucket")
+
+            with ThreadPoolExecutor(max_workers=3) as ex:
+                w_frontier = ex.submit(st.write, "frontier", r + 1,
+                                       next_frontier)
+                w_seen = ex.submit(st.write, "seen", r + 1, seen_delta)
+                w_bloom = ex.submit(st.write, "bloom", r + 1, bloom_write)
+                w_frontier.result()  # residual observation resolves here
+                stats.residual = _obs_long(obs_residual, "n",
+                                           residual.count)
+                stats.frontier_next = stats.residual + stats.fresh
+                st.write_rows("round_log", r,
+                              self._log_rows(r, stats, per_bucket),
+                              ROUND_LOG_SCHEMA)
+                w_seen.result()
+                w_bloom.result()
+            sched_write.result()
             st.commit_round(r)
-            self._carry["frontier"] = (r + 1, frontier)
-            self._carry["bloom"] = (r + 1, bloom_df)
-            if self._bloom_driver is not None \
-                    and self._bloom_driver[0] == r:
-                self._bloom_driver = (r + 1, self._bloom_driver[1])
-            return stats
-
-        # the schedule write is small once the wave cache is hot; run
-        # it on a driver thread while THIS thread builds and writes the
-        # heavyweight frontier chain. Joined before commit_round.
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-        _sched_pool = _TPE(max_workers=1)
-        _sched_write = _sched_pool.submit(st.write, "schedule", r,
-                                          schedule)
-
-        # "fetch" = join the wave against the big pages scan (broadcast
-        # while the wave bound allows; shuffle join above the threshold
-        # so the driver never holds an unbounded wave). depth/score
-        # ride the fetch join and pass THROUGH the extraction UDF (two
-        # numeric columns in the Arrow batch), so the outlink explode
-        # needs no second wave join — one broadcast build and one join
-        # fewer per round, same rows out (pages ⋈ wave is 1:1 on url).
-        fetched = self.pages.join(
-            _wave_side(wave.select("url", "depth", "score")), "url") \
-            .select("url", "html", "depth", "score")
-        obs_fetch = Observation()
-        # one fused Python crossing: HTML pages → a[href] outlinks
-        # (priority null); sitemap-pattern URLs → parse_sitemap entries
-        # (advertised pages AND child sitemaps, with priorities) — the
-        # recursion that follows a sitemapindex chain across rounds.
-        # Shared kernel crawl_extract_outlinks == the oracle's.
-        ext = _crawl_extract(
-            fetched, respect_nofollow=pol.respect_nofollow).observe(
-            obs_fetch, F.count(F.lit(1)).alias("n"))
-
-        links = (ext.select("depth", "score",
-                            F.explode("outlinks").alias("l"))
-                 .select(F.col("l.dst").alias("dst"),
-                         F.col("l.priority").alias("prio"),
-                         "depth", "score"))
-        cand = (links
-                .select(F.col("dst").alias("url"),
-                        (F.col("depth") + 1).alias("depth"),
-                        # sitemap-advertised priority wins over decay —
-                        # the advertisement is the better signal
-                        F.coalesce(
-                            F.col("prio"),
-                            F.col("score") * pol.score_decay)
-                        .alias("score"))
-                .groupBy("url")
-                .agg(F.min("depth").alias("depth"),
-                     F.max("score").alias("score")))
-        cand = _host_cols(cand, pol)
-        cand = robots_filter(cand, pol, rules=self._rules,
-                             rules_rows=self._rules_rows).filter(
-            F.col("depth") <= pol.max_depth)
-
-        # bloom prefilter. Two size-guarded regimes, identical results
-        # (both route through the same bloom/cuckoo probe kernels):
-        # - driver-mirrored state under broadcast_bloom_bytes: the
-        #   payload dict broadcasts and the probe is a column UDF over
-        #   the candidates IN PLACE — no candidate exchange, no state
-        #   exchange, no cogroup stage;
-        # - above the guard (10^10-URL regime): bucket-cogrouped probe,
-        #   state and candidates sharing the host_bucket partitioning.
-        bloom_df = self._read_state("bloom", r, BLOOM_SCHEMA)
-        bdrv = self._bloom_driver \
-            if self._bloom_driver is not None \
-            and self._bloom_driver[0] == r else None
-        obs_probe = Observation()
-        if bdrv is not None:
-            bc_payloads = self.spark.sparkContext.broadcast(bdrv[1])
-            probed = cand.withColumn(
-                "bloom_hit",
-                _broadcast_probe_udf(bc_payloads, pol.filter_kind)(
-                    "host_bucket", "url"))
-        else:
-            probed = (cand.groupBy("host_bucket")
-                      .cogroup(bloom_df.groupBy("host_bucket"))
-                      .applyInPandas(
-                          _make_probe_fn(pol.filter_kind), schema=(
-                              "url string, depth int, score double, "
-                              "host string, host_bucket int, "
-                              "url_hash long, bloom_hit boolean")))
-        probed = (probed
-                  .observe(obs_probe,
-                           F.count(F.lit(1)).alias("candidates"),
-                           F.sum(F.col("bloom_hit").cast("long"))
-                           .alias("hits"))
-                  # cache: both union branches below must share ONE
-                  # materialization, or the observe node (and the whole
-                  # fetch→extract chain above it) executes twice and the
-                  # observation receives duplicate metric rows
-                  .cache())
-        maybe_seen = probed.filter("bloom_hit").drop("bloom_hit")
-        definitely_new = probed.filter("NOT bloom_hit").drop("bloom_hit")
-
-        # exact authority: only bloom-hits pay the anti-join shuffle
-        seen = st.read_all_rounds("seen", r, SEEN_SCHEMA)
-        confirmed_new = maybe_seen.join(
-            seen.select("url"), "url", "left_anti")
-        # localCheckpoint, not cache: the four downstream consumers
-        # (frontier/seen/bloom writes + per-bucket counters) then
-        # analyze a LEAF plan instead of re-canonicalizing the whole
-        # fetch→extract→probe→anti-join tree once per query — per-round
-        # driver latency, the dominant q3 cost at bench scale (the
-        # round's real compute is ~0.5 s of extraction against ~3 s of
-        # orchestration). Eager: materializes the heavy chain exactly
-        # once and resolves the fetch/probe observations, same as the
-        # cache+count it replaces. The checkpointed table is
-        # fresh-delta-sized; blocks free with the reference.
-        _sc.setJobDescription(f"round {r}: fetch+extract+probe+antijoin")
-        fresh = definitely_new.unionByName(confirmed_new) \
-            .localCheckpoint(eager=True)
-
-        obs_residual = Observation()
-        residual = residual.observe(
-            obs_residual, F.count(F.lit(1)).alias("n"))
-        # the frontier IS the priority queue: host-bucketed files, each
-        # internally (depth, -score, url)-ordered (north star: "host-
-        # bucketed, depth/score-ordered table"), so the next round's
-        # per-host top-k scans presorted bucket-local data
-        # lazy localCheckpoint: the write job below materializes the
-        # blocks, and round r+1's frontier read then reuses them via
-        # the carry (set only after commit) instead of re-scanning the
-        # parquet this round just wrote
-        next_frontier = (residual.unionByName(
-            fresh.select("url", "host", "host_bucket", "depth", "score",
-                         F.lit(r + 1).alias("discovered_round")))
-            .repartition(pol.n_buckets, "host_bucket")
-            .sortWithinPartitions("depth", F.desc("score"), "url")
-            .localCheckpoint(eager=False))
-
-        # ONE collect over the checkpointed fresh delta yields the
-        # per-bucket counters AND the total (their sum) — the separate
-        # fresh.count() job is folded away. The frontier write, seen
-        # write and bloom merge+write remain independent consumers run
-        # as concurrent jobs from driver threads: the frontier's
-        # repartition+sort+write overlaps the bloom cogroup instead of
-        # preceding it. commit_round only after every write joined — a
-        # failed write raises out of result() and the uncommitted round
-        # replays on resume.
-        _sc.setJobDescription(f"round {r}: per-bucket fresh counters")
-        per_bucket = [(row["host_bucket"], row["n"]) for row in
-                      fresh.groupBy("host_bucket").agg(
-                          F.count("*").alias("n")).collect()]
-        _sc.setJobDescription(None)
-        stats.fresh = sum(n for _, n in per_bucket)
-        stats.fetched = _obs_long(obs_fetch, "n", ext.count)
-        stats.candidates = _obs_long(obs_probe, "candidates", probed.count)
-        stats.bloom_hits = _obs_long(
-            obs_probe, "hits",
-            lambda: probed.filter("bloom_hit").count())
-
-        # bloom |= fresh, per bucket. The cogroup emits every bucket key
-        # present on either side, so it alone produces exactly one row
-        # per bucket: fresh-only → new payload, both → merged, bloom-only
-        # → old payload echoed.
-        if bdrv is not None:
-            # buckets that received fresh keys merge against the
-            # broadcast payloads (one exchange: the fresh groupBy);
-            # untouched buckets echo their carried rows — the same
-            # one-row-per-present-bucket output the cogroup produces
-            touched = [int(b) for b, _ in per_bucket]
-            merged = (fresh.groupBy("host_bucket")
-                      .applyInPandas(
-                          _make_broadcast_merge_fn(bc_payloads,
-                                                   pol.filter_kind),
-                          schema=BLOOM_SCHEMA))
-            untouched = bloom_df.filter(
-                ~F.col("host_bucket").isin(touched)) if touched \
-                else bloom_df
-            new_bloom = merged.unionByName(untouched) \
-                .localCheckpoint(eager=False)
-        else:
-            new_bloom = (fresh.groupBy("host_bucket")
-                         .cogroup(bloom_df.groupBy("host_bucket"))
-                         .applyInPandas(_make_merge_fn(pol.filter_kind),
-                                        schema=BLOOM_SCHEMA)
-                         .localCheckpoint(eager=False))
-        # the seen table is sharded by host bucket like every other
-        # state table: one file per bucket per round instead of one per
-        # fresh-delta partition — the cumulative anti-join scan lists
-        # n_buckets files per round, not O(shuffle partitions)
-        seen_delta = fresh.select(
-            "url", "host_bucket", "url_hash",
-            F.lit(r + 1).alias("round")) \
-            .repartition(pol.n_buckets, "host_bucket")
-
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=3) as ex:
-            w_frontier = ex.submit(st.write, "frontier", r + 1,
-                                   next_frontier)
-            w_seen = ex.submit(st.write, "seen", r + 1, seen_delta)
-            w_bloom = ex.submit(st.write, "bloom", r + 1, new_bloom)
-            w_frontier.result()  # residual observation resolves here
-            stats.residual = _obs_long(obs_residual, "n", residual.count)
-            stats.frontier_next = stats.residual + stats.fresh
-            st.write_rows("round_log", r,
-                          self._log_rows(r, stats, per_bucket),
-                          ROUND_LOG_SCHEMA)
-            w_seen.result()
-            w_bloom.result()
-        _sched_write.result()
-        _sched_pool.shutdown()
-        st.commit_round(r)
-        # committed: round r+1 may reuse the materialized twins
-        self._carry["frontier"] = (r + 1, next_frontier)
-        self._carry["bloom"] = (r + 1, new_bloom)
-        if bdrv is not None:
-            # refresh the driver mirror from the written state (reads
-            # the checkpoint blocks — one tiny bounded job: the mirror
-            # only exists while total bytes are under the guard, and a
-            # failure here only demotes to the cogroup path)
-            try:
-                rows = new_bloom.collect()
-                total = sum(len(row["payload"]) for row in rows)
-                if total <= pol.broadcast_bloom_bytes:
-                    self._bloom_driver = (r + 1, {
-                        int(row["host_bucket"]):
-                        (bytes(row["payload"]), int(row["n_items"]))
-                        for row in rows})
-                else:
-                    self._bloom_driver = None
-            except Exception:  # noqa: BLE001 — optimization mirror only
-                self._bloom_driver = None
-            bc_payloads.unpersist()
+            # committed: round r+1 may reuse the materialized twins
+            self._carry["frontier"] = (r + 1, next_frontier)
+            self._carry["bloom"] = (r + 1, new_bloom)
+            if bdrv is not None:
+                self._bloom_driver = self._refresh_mirror(
+                    r + 1, new_bloom, obs_bloom)
+        finally:
+            _sc.setJobDescription(None)
+            sched_pool.shutdown(wait=True)
+            if bc_payloads is not None:
+                bc_payloads.unpersist()
+            if probed is not None:
+                probed.unpersist()
 
         # periodic seen-delta compaction (crash-safe; bounds file count)
         if pol.compact_every and (r + 1) % pol.compact_every == 0:
             st.compact("seen", r + 1, SEEN_SCHEMA)
-
-        probed.unpersist()
         return stats
+
+    def _idle_round(self, r: int, stats: RoundStats, frontier: DataFrame,
+                    schedule: DataFrame) -> RoundStats:
+        """Write and commit a round that fetches nothing: the frontier
+        and bloom state carry over unchanged, the seen delta is
+        empty."""
+        st = self.state
+        bloom_df = self._read_state("bloom", r, BLOOM_SCHEMA)
+        st.write("schedule", r, schedule)
+        st.write("frontier", r + 1, frontier)
+        st.write("seen", r + 1, local_table(self.spark, [], SEEN_SCHEMA))
+        st.write("bloom", r + 1, bloom_df)
+        st.write_rows("round_log", r, self._log_rows(r, stats, []),
+                      ROUND_LOG_SCHEMA)
+        st.commit_round(r)
+        self._carry["frontier"] = (r + 1, frontier)
+        self._carry["bloom"] = (r + 1, bloom_df)
+        if self._bloom_driver is not None and self._bloom_driver[0] == r:
+            self._bloom_driver = (r + 1, self._bloom_driver[1])
+        return stats
+
+    def _refresh_mirror(self, r: int, new_bloom: DataFrame,
+                        obs_bloom) -> tuple[int, dict] | None:
+        """The driver mirror for round ``r`` from the just-written bloom
+        state, or None (demote to the cogroup path). The size guard is
+        checked BEFORE anything is collected: the total payload size
+        rode the bloom write as an Observation (a missing or null metric
+        costs one tiny aggregate over the checkpoint blocks instead of
+        passing unchecked), and only a state under
+        ``broadcast_bloom_bytes`` is collected. A failure here only
+        demotes — the mirror is an optimization, never the authority."""
+        try:
+            total = obs_bloom.get.get("bytes")
+            if total is None:
+                total = new_bloom.agg(F.sum(F.length("payload"))) \
+                    .first()[0] or 0
+            if total > self.policy.broadcast_bloom_bytes:
+                return None
+            return (r, {int(row["host_bucket"]):
+                        (bytes(row["payload"]), int(row["n_items"]))
+                        for row in new_bloom.collect()})
+        except Exception:  # noqa: BLE001 — optimization mirror only
+            return None
 
     # ------------------------------------------------------------------
     def run(self, max_rounds: int = 32) -> list[RoundStats]:
@@ -724,40 +754,61 @@ def round_metrics(round_log: DataFrame) -> DataFrame:
                     .cast("double").alias("max_bucket_share")))
 
 
-_CRAWL_EXT_SCHEMA = ("url string, "
-                     "outlinks array<struct<dst:string,priority:double>>")
-_CRAWL_EXT_DS_SCHEMA = _CRAWL_EXT_SCHEMA + ", depth int, score double"
+_CRAWL_EXT_SCHEMA = ("url string, prio double, host string, "
+                     "host_bucket int, url_hash long, depth int, "
+                     "score double")
+_HOST_RE = re.compile(HOST_RE_SQL)
 
 
-def _crawl_extract(fetched: DataFrame,
+def outlink_keys(url: str, n_buckets: int) -> tuple[str, int, int]:
+    """``(host, host_bucket, url_hash)`` of a candidate URL — the same
+    keys the JVM derives as ``regexp_extract(url, HOST_RE_SQL, 1)``
+    (empty when the pattern does not match) followed by the shared
+    :func:`host_bucket` / :func:`url_hash64` kernels."""
+    m = _HOST_RE.match(url)
+    host = m.group(1) if m is not None else ""
+    return host, host_bucket(host, n_buckets), url_hash64(url)
+
+
+def _crawl_extract(fetched: DataFrame, n_buckets: int,
                    respect_nofollow: bool = False) -> DataFrame:
-    """(url, html[, depth, score]) → (url, outlinks[(dst, priority)]
-    [, depth, score]) in ONE ``mapInPandas`` crossing, dispatching per
-    row on the sitemap URL pattern via the shared pure kernel
+    """(url, html, depth, score) → one row per outlink
+    ``(url, prio, host, host_bucket, url_hash, depth, score)`` in ONE
+    ``mapInPandas`` crossing, dispatching per row on the sitemap URL
+    pattern via the shared pure kernel
     :func:`~nipper_spark.crawl.sitemaps.crawl_extract_outlinks`.
-    ``depth``/``score``, when present, pass through the Arrow batch
-    untouched so the caller's outlink explode needs no join back to
-    the wave."""
-    passthrough = "depth" in fetched.columns
+    ``url`` is the outlink, ``prio`` its sitemap priority (null for an
+    HTML link), ``depth``/``score`` the fetched page's, passed through
+    so the caller needs no join back to the wave. The outlink's keys
+    (:func:`outlink_keys`) are computed in this crossing, so no second
+    Python stage derives them downstream."""
 
     def _ext(batches):
         for pdf in batches:
-            urls, outs = [], []
-            for url, h in zip(pdf["url"], pdf["html"]):
-                urls.append(url)
-                outs.append([{"dst": d, "priority": p}
-                             for d, p in crawl_extract_outlinks(
-                                 url, h,
-                                 respect_nofollow=respect_nofollow)])
-            out = pd.DataFrame({"url": urls, "outlinks": outs})
-            if passthrough:
-                out["depth"] = pdf["depth"].reset_index(drop=True)
-                out["score"] = pdf["score"].reset_index(drop=True)
-            yield out
+            dst, prio, hosts, buckets, hashes, depth, score = \
+                [], [], [], [], [], [], []
+            for url, h, d, s in zip(pdf["url"], pdf["html"],
+                                    pdf["depth"], pdf["score"]):
+                for link, p in crawl_extract_outlinks(
+                        url, h, respect_nofollow=respect_nofollow):
+                    host, b, uh = outlink_keys(link, n_buckets)
+                    dst.append(link)
+                    prio.append(p)
+                    hosts.append(host)
+                    buckets.append(b)
+                    hashes.append(uh)
+                    depth.append(d)
+                    score.append(s)
+            yield pd.DataFrame({
+                "url": pd.Series(dst, dtype=object),
+                "prio": pd.Series(prio, dtype="float64"),
+                "host": pd.Series(hosts, dtype=object),
+                "host_bucket": pd.Series(buckets, dtype="int32"),
+                "url_hash": pd.Series(hashes, dtype="int64"),
+                "depth": pd.Series(depth, dtype="int32"),
+                "score": pd.Series(score, dtype="float64")})
 
-    return fetched.mapInPandas(
-        _ext, schema=_CRAWL_EXT_DS_SCHEMA if passthrough
-        else _CRAWL_EXT_SCHEMA)
+    return fetched.mapInPandas(_ext, schema=_CRAWL_EXT_SCHEMA)
 
 
 # ----------------------------------------------------------------------

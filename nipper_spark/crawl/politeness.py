@@ -21,6 +21,7 @@ from functools import lru_cache
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nipper_spark.crawl.state import local_table
 from nipper_spark.operators.topk import topk_per_key
 
 # deterministic total order of a frontier/wave: closest-first BFS,
@@ -161,10 +162,11 @@ class CrawlPolicy:
 
 
 def budgets_df(spark, policy: CrawlPolicy) -> DataFrame:
-    """Host-override budgets as a (small, broadcastable) dimension."""
+    """Host-override budgets as a (small, broadcastable) dimension —
+    a JVM local relation, so its scans run no Python task."""
     rows = [(h, t) for h, t in sorted(policy.host_tokens.items())]
-    return spark.createDataFrame(rows or [("__none__", 0)],
-                                 "host string, tokens int")
+    return local_table(spark, rows or [("__none__", 0)],
+                       "host string, tokens int")
 
 
 def _maybe_broadcast(df: DataFrame, n_rows: int | None,
@@ -244,16 +246,16 @@ def wave_rank(frontier: DataFrame, budgets: DataFrame,
 def rules_df_from_policy(spark, policy: CrawlPolicy) -> DataFrame:
     """Config-dict robots rules as the (host, prefix, allow) rules
     table — the engine consumes ONLY the table form; dicts are a
-    small-scale configuration convenience."""
+    small-scale configuration convenience. A JVM local relation, like
+    :func:`budgets_df`."""
     rows = [(h, p, False)
             for h, ps in sorted(policy.robots_disallow.items())
             for p in sorted(set(ps)) if p]
     rows += [(h, p, True)
              for h, ps in sorted(policy.robots_allow.items())
              for p in sorted(set(ps)) if p]
-    return spark.createDataFrame(rows or [("__none__", "\x00", False)],
-                                 "host string, prefix string, "
-                                 "allow boolean")
+    return local_table(spark, rows or [("__none__", "\x00", False)],
+                       "host string, prefix string, allow boolean")
 
 
 def policy_rules_rows(policy: CrawlPolicy) -> int:
@@ -286,14 +288,15 @@ def robots_filter(candidates: DataFrame, policy: CrawlPolicy,
     the url-grouped aggregation — the price of wildcard+Allow
     precedence over the old prefix-only anti-join.
 
+    ``rules=None`` means no rules: candidates pass unchanged. Config
+    dicts are not read here — the engine converts them once into a
+    table (:func:`rules_df_from_policy`) and passes that.
+
     Contract: candidate rows are expected UNIQUE (the engine calls
     this after its per-url aggregation); duplicate candidate rows
     would collapse through the decision groupBy."""
     if rules is None:
-        if not policy.robots_disallow and not policy.robots_allow:
-            return candidates
-        rules = rules_df_from_policy(candidates.sparkSession, policy)
-        rules_rows = policy_rules_rows(policy)
+        return candidates
     if "allow" not in rules.columns:  # legacy (host, prefix) table
         rules = rules.withColumn("allow", F.lit(False))
     # empty rules match nothing (robots_decision skips them; LIKE '%'

@@ -57,6 +57,44 @@ def bucket_skew(counts) -> tuple[int, int, float]:
     return vals[-1], p99, (vals[-1] / total if total else 0.0)
 
 
+def arrow_table(rows: list, schema: str):
+    """Driver-held rows as a pyarrow Table typed by a Spark DDL
+    schema string ("name type, ..." over scalar types and arrays of
+    them — the dedup store's ``sig array<long>`` reaches here through
+    an empty :meth:`CrawlState.read_all_rounds`) — the one
+    arrow↔spark type mapping of the crawl state, shared by
+    :meth:`CrawlState.write_rows` and :func:`local_table`."""
+    import pyarrow as pa
+    types = {"int": pa.int32(), "long": pa.int64(), "bigint": pa.int64(),
+             "double": pa.float64(), "string": pa.string(),
+             "boolean": pa.bool_(), "binary": pa.binary()}
+
+    def arrow_type(typ: str):
+        if typ.startswith("array<") and typ.endswith(">"):
+            return pa.list_(arrow_type(typ[len("array<"):-1]))
+        return types[typ]
+
+    fields = []
+    for part in schema.split(","):
+        name, typ = part.strip().rsplit(" ", 1)
+        fields.append(pa.field(name, arrow_type(typ)))
+    pschema = pa.schema(fields)
+    cols = list(zip(*rows)) if rows else [[] for _ in fields]
+    return pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, pschema)],
+        schema=pschema)
+
+
+def local_table(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """Driver-built rows (dimension tables, list-bootstrap state, empty
+    reads) as a JVM local relation: Spark converts a pyarrow Table into
+    a ``LocalRelation`` (up to spark.sql.execution.arrow.
+    localRelationThreshold), so scans run as ``LocalTableScan`` in the
+    JVM. A list-built ``createDataFrame`` is instead a Python RDD whose
+    every scan starts a Python task just to unpickle the rows."""
+    return spark.createDataFrame(arrow_table(rows, schema))
+
+
 class CrawlState:
     def __init__(self, spark: SparkSession, state_dir: str) -> None:
         self.spark = spark
@@ -111,34 +149,21 @@ class CrawlState:
         fixed latency), under the same staging-then-rename visibility
         contract as :meth:`write`. Read back via :meth:`read` /
         :meth:`read_all_rounds` with the explicit schema, so the
-        arrow↔spark type mapping is pinned here."""
-        import pyarrow as pa
+        arrow↔spark type mapping is pinned in :func:`arrow_table`."""
         import pyarrow.parquet as pq
-        _MAP = {"int": pa.int32(), "long": pa.int64(),
-                "bigint": pa.int64(), "double": pa.float64(),
-                "string": pa.string(), "boolean": pa.bool_(),
-                "binary": pa.binary()}
-        fields = []
-        for part in schema.split(","):
-            name, typ = part.strip().rsplit(" ", 1)
-            fields.append(pa.field(name, _MAP[typ]))
-        pschema = pa.schema(fields)
-        cols = list(zip(*rows)) if rows else [[] for _ in fields]
-        tbl = pa.Table.from_arrays(
-            [pa.array(list(c), type=f.type)
-             for c, f in zip(cols, pschema)], schema=pschema)
         final = self._round_dir(table, r)
         tmp = final + ".staging"
         shutil.rmtree(tmp, ignore_errors=True)
         os.makedirs(tmp)
-        pq.write_table(tbl, os.path.join(tmp, "part-00000.parquet"))
+        pq.write_table(arrow_table(rows, schema),
+                       os.path.join(tmp, "part-00000.parquet"))
         shutil.rmtree(final, ignore_errors=True)
         os.replace(tmp, final)
 
     def read(self, table: str, r: int, schema: str) -> DataFrame:
         path = self._round_dir(table, r)
         if not os.path.isdir(path):
-            return self.spark.createDataFrame([], schema)
+            return local_table(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(path)
 
     def read_all_rounds(self, table: str, upto: int, schema: str) -> DataFrame:
@@ -146,7 +171,7 @@ class CrawlState:
         paths = [self._round_dir(table, r) for r in range(upto + 1)]
         paths = [p for p in paths if os.path.isdir(p)]
         if not paths:
-            return self.spark.createDataFrame([], schema)
+            return local_table(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(*paths)
 
     def compact(self, table: str, upto: int, schema: str) -> None:

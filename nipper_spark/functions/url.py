@@ -68,9 +68,10 @@ _SEG_SAFE = _PATH_SAFE.replace("/", "")
 
 _DEFAULT_PORTS = {"http": "80", "https": "443"}
 
-# THE host-extraction pattern, shared verbatim with every JVM-side
-# regexp_extract twin (frontier/_host_cols, streaming keys): bracketed
-# IPv6 literal or a regular reg-name stopped by / or :
+# THE host-extraction pattern, shared verbatim by every JVM-side
+# regexp_extract twin (streaming keys, url filters) and the Python-side
+# crawl keys (frontier.outlink_keys): bracketed IPv6 literal or a
+# regular reg-name stopped by / or :
 HOST_RE_SQL = r"^https?://(\[[^\]]+\]|[^/:]+)"
 
 # WHATWG forbidden host code points (superset incl. %): any of these

@@ -111,3 +111,38 @@ def shuffle_bytes(spark) -> tuple[int, int]:
         read += e.totalShuffleRead()
         write += e.totalShuffleWrite()
     return read, write
+
+
+def sql_executions(spark, after: int = -1) -> list[tuple[int, str, str]]:
+    """``(execution id, description, physical plan text)`` of every SQL
+    execution with an id above ``after``, read from the SQL status store
+    (kept with the UI off) — the plans a call really ran, with the
+    final adaptive plan once AQE re-planned them."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    out = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.executionId() > after:
+            out.append((e.executionId(), e.description() or "",
+                        e.physicalPlanDescription()))
+    return out
+
+
+def plan_graph(spark, execution_id: int
+               ) -> tuple[dict[int, str], dict[int, list[int]]]:
+    """An execution's plan graph as ``({node id: name}, {node id:
+    [child node ids]})`` — cached relations' plans included."""
+    g = spark._jsparkSession.sharedState().statusStore() \
+        .planGraph(execution_id)
+    names: dict[int, str] = {}
+    it = g.allNodes().iterator()
+    while it.hasNext():
+        n = it.next()
+        names[n.id()] = n.name()
+    children: dict[int, list[int]] = {}
+    it = g.edges().iterator()
+    while it.hasNext():
+        e = it.next()
+        children.setdefault(e.toId(), []).append(e.fromId())
+    return names, children

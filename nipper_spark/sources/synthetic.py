@@ -30,6 +30,9 @@ import os
 import random
 
 REFERENCE_PAGES_DIR = "/root/reference/test-pages"
+# overrides REFERENCE_PAGES_DIR, e.g. for a checkout of the reference
+# mounted elsewhere
+REFERENCE_PAGES_ENV = "NIPPER_REFERENCE_PAGES"
 
 FIXTURE_URLS = {
     "page.html": "http://fixture.test/page",
@@ -50,12 +53,33 @@ _WORDS = ("crawl frontier spark arrow parquet shuffle partition bloom "
           "page link anchor text body title meta header footer nav").split()
 
 
+class ReferenceFixturesMissing(FileNotFoundError):
+    """The reference test pages are not where :func:`reference_page`
+    looks — an environment failure, not an engine one."""
+
+
+def reference_page(name: str | None = None) -> str:
+    """THE location of the reference test pages — the path of page
+    ``name``, or of their directory when ``name`` is None — under
+    ``$NIPPER_REFERENCE_PAGES`` when set, else the read-only reference
+    mount. Every reader of the fixtures (tests, examples, the fixture
+    pages table) resolves the path here. Raises
+    :class:`ReferenceFixturesMissing` with the one-line reason when it
+    does not exist."""
+    path = os.environ.get(REFERENCE_PAGES_ENV) or REFERENCE_PAGES_DIR
+    if name is not None:
+        path = os.path.join(path, name)
+    if not os.path.exists(path):
+        raise ReferenceFixturesMissing(
+            f"reference fixtures absent at {path}")
+    return path
+
+
 def fixture_pages_rows() -> list[tuple]:
     """The five reference test pages as pages-table rows."""
     rows = []
     for i, (fname, url) in enumerate(sorted(FIXTURE_URLS.items())):
-        path = os.path.join(REFERENCE_PAGES_DIR, fname)
-        with open(path, "rb") as f:
+        with open(reference_page(fname), "rb") as f:
             html = f.read()
         lang = "zh-CN" if fname == "wisburg.html" else "en"
         rows.append((url, _EPOCH + datetime.timedelta(seconds=i), html,

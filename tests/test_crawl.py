@@ -7,6 +7,8 @@ and final URL-seen set under the same seed list + politeness budget
 import shutil
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from nipper_spark.crawl import bloom as B
@@ -14,6 +16,7 @@ from nipper_spark.crawl.frontier import FrontierEngine
 from nipper_spark.crawl.oracle import crawl_oracle
 from nipper_spark.crawl.politeness import CrawlPolicy
 from nipper_spark.crawl.state import SCHEDULE_SCHEMA, SEEN_SCHEMA, CrawlState
+from nipper_spark.functions.url import canonicalize_url
 from nipper_spark.sources.synthetic import synth_pages_rows
 
 def make_seeds(rows):
@@ -23,6 +26,20 @@ def make_seeds(rows):
     messy = u1.replace("http://", "HTTP://").replace(
         "host", "HOST", 1) + "#frag"
     return [(u0, 1.0), (messy, 0.9), (u2, 0.8)]
+
+
+# canonical outlinks: DNS and IPv6 hosts, ports, messy paths/queries
+_canonical_urls = st.builds(
+    lambda scheme, host, port, path: f"{scheme}://{host}{port}/{path}",
+    st.sampled_from(["http", "https", "HTTP"]),
+    st.one_of(st.text(alphabet=st.sampled_from(list("abcXZ09-.é")),
+                      min_size=1, max_size=12),
+              st.sampled_from(["[::1]", "[2001:DB8::1]", "h.test",
+                               "xn--bcher-kva.test"])),
+    st.sampled_from(["", ":80", ":443", ":8080"]),
+    st.text(alphabet=st.sampled_from(list("ab/:?#=&%.~é ")),
+            max_size=20)).map(canonicalize_url).filter(
+    lambda u: u is not None)
 
 
 POLICY = CrawlPolicy(
@@ -296,6 +313,157 @@ class TestResume:
         seen = {x["url"] for x in st.read_all_rounds(
             "seen", 64, SEEN_SCHEMA).collect()}
         assert seen == oracle.seen
+
+    def test_failed_round_releases_resources(
+            self, spark, pages, oracle, seeds, tmp_path_factory,
+            monkeypatch):
+        """A state write that raises mid-round must not leak the
+        round's resources: the round stays uncommitted, the schedule
+        write thread has ended, the broadcast mirror payloads are
+        unpersisted, and resume_round replays the round to the
+        oracle-exact result."""
+        import threading
+
+        from pyspark.broadcast import Broadcast
+
+        from nipper_spark.crawl.state import CrawlState as CS
+        state_dir = str(tmp_path_factory.mktemp("crawl_state_release"))
+        eng = FrontierEngine(spark, pages, state_dir, POLICY)
+        eng.bootstrap(seeds)
+        eng.run_round(0)
+        assert eng._bloom_driver is not None  # round 1 broadcasts
+
+        created, released = [], []
+        real_broadcast = type(spark.sparkContext).broadcast
+        real_unpersist = Broadcast.unpersist
+        real_write = CS.write
+
+        def spy_broadcast(sc, value):
+            b = real_broadcast(sc, value)
+            created.append(b)
+            return b
+
+        def spy_unpersist(b, blocking=False):
+            released.append(b)
+            return real_unpersist(b, blocking)
+
+        def failing_write(self, table, r, df):
+            if table == "frontier" and r == 2:
+                raise OSError("injected: frontier write lost")
+            return real_write(self, table, r, df)
+
+        threads_before = set(threading.enumerate())
+        monkeypatch.setattr(type(spark.sparkContext), "broadcast",
+                            spy_broadcast)
+        monkeypatch.setattr(Broadcast, "unpersist", spy_unpersist)
+        monkeypatch.setattr(CS, "write", failing_write)
+        with pytest.raises(OSError, match="injected"):
+            eng.run_round(1)
+        monkeypatch.undo()
+
+        assert CrawlState(spark, state_dir).last_committed_round() == 0
+        leaked = [t for t in set(threading.enumerate()) - threads_before
+                  if t.name.startswith("ThreadPoolExecutor")]
+        assert not leaked, leaked
+        assert len(created) == 1 and released == created
+
+        eng2 = FrontierEngine(spark, pages, state_dir, POLICY)
+        assert eng2.resume_round() == 1
+        rest = eng2.run(max_rounds=64)
+        scheds = read_engine_schedules(spark, state_dir,
+                                       1 + len(rest) + 1)
+        non_empty = {r: w for r, w in scheds.items() if w}
+        for r, wave in enumerate(oracle.schedules):
+            assert non_empty[r] == wave, f"round {r} mismatch"
+        seen = {x["url"] for x in CrawlState(spark, state_dir)
+                .read_all_rounds("seen", 64, SEEN_SCHEMA).collect()}
+        assert seen == oracle.seen
+
+
+class TestBloomMirrorGuard:
+    def test_guard_trip_demotes_to_cogroup(self, spark, pages, seeds,
+                                           oracle, tmp_path_factory,
+                                           monkeypatch):
+        """Fault injection for the driver-mirror size guard: when the
+        refreshed bloom state outgrows broadcast_bloom_bytes, the
+        refresh collects no payload, the mirror is dropped, the next
+        round takes the bucket-cogroup path, and the crawl still equals
+        the oracle."""
+        import dataclasses
+
+        from nipper_spark.crawl import frontier as FR
+        state_dir = str(tmp_path_factory.mktemp("crawl_state_guard"))
+        eng = FrontierEngine(spark, pages, state_dir, POLICY)
+        eng.bootstrap(seeds)
+        assert eng._bloom_driver is not None  # round 0 broadcasts
+        # the state now exceeds the guard: round 0's refresh must trip
+        eng.policy = dataclasses.replace(POLICY, broadcast_bloom_bytes=1)
+
+        collected, cogroup_probes = [], []
+        DataFrame = type(pages)  # the session's concrete DataFrame class
+        real_collect = DataFrame.collect
+        real_probe_fn = FR._make_probe_fn
+
+        def spy_collect(df):
+            collected.append(df.columns)
+            return real_collect(df)
+
+        def spy_probe_fn(kind):
+            cogroup_probes.append(kind)
+            return real_probe_fn(kind)
+
+        monkeypatch.setattr(DataFrame, "collect", spy_collect)
+        monkeypatch.setattr(FR, "_make_probe_fn", spy_probe_fn)
+        eng.run_round(0)
+        assert eng._bloom_driver is None
+        assert not any("payload" in cols for cols in collected), collected
+        assert not cogroup_probes
+        eng.run_round(1, known_nonempty=True)
+        assert cogroup_probes == [POLICY.filter_kind]
+        monkeypatch.undo()
+
+        rest = eng.run(max_rounds=64)
+        scheds = read_engine_schedules(spark, state_dir,
+                                       2 + len(rest) + 1)
+        non_empty = {r: w for r, w in scheds.items() if w}
+        assert len(non_empty) == len(oracle.schedules)
+        for r, wave in enumerate(oracle.schedules):
+            assert non_empty[r] == wave, f"round {r} mismatch"
+        seen = {x["url"] for x in CrawlState(spark, state_dir)
+                .read_all_rounds("seen", 64, SEEN_SCHEMA).collect()}
+        assert seen == oracle.seen
+
+
+class TestFusedOutlinkKeys:
+    """The extraction crossing emits each outlink's (host, host_bucket,
+    url_hash) through outlink_keys — the one definition of a URL's
+    keys, which _host_cols applies to seed tables too; they must equal
+    the JVM's regexp_extract(url, HOST_RE_SQL, 1) followed by the
+    shared host_bucket/url_hash64 kernels."""
+
+    @settings(max_examples=25, deadline=None)
+    @given(st.lists(_canonical_urls, min_size=1, max_size=12))
+    def test_fused_keys_equal_jvm_host_extraction(self, spark, urls):
+        import html as H
+
+        from nipper_spark.crawl.frontier import _crawl_extract
+        from nipper_spark.crawl.state import local_table
+        from nipper_spark.functions.url import (
+            HOST_RE_SQL, host_bucket, url_hash64)
+        body = "".join(f'<a href="{H.escape(u)}">x</a>' for u in urls)
+        fetched = local_table(
+            spark, [("http://base.test/", body.encode(), 1, 0.5)],
+            "url string, html binary, depth int, score double")
+        out = _crawl_extract(fetched, POLICY.n_buckets).select(
+            "url", "host", "host_bucket", "url_hash",
+            F.regexp_extract("url", HOST_RE_SQL, 1).alias("jvm_host"))
+        rows = out.collect()
+        assert rows
+        for r in rows:
+            assert r["host"] == r["jvm_host"], r
+            assert r["host_bucket"] == host_bucket(r["jvm_host"],
+                                                   POLICY.n_buckets), r
+            assert r["url_hash"] == url_hash64(r["url"]), r
 
 
 class TestNofollow:

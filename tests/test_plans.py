@@ -12,8 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from nipper_spark.plans.inspect import (
-    exchange_input_columns, has_broadcast_hash_join, plan_string,
-    pushed_filters, python_eval_count, read_schema_columns)
+    exchange_input_columns, has_broadcast_hash_join, plan_graph,
+    plan_string, pushed_filters, python_eval_count, read_schema_columns,
+    sql_executions)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
@@ -170,6 +171,72 @@ class TestPythonBoundary:
         from nipper_spark.functions.html_udfs import hacker_news_stories
         pages = spark.read.parquet(pages_parquet)
         assert python_eval_count(hacker_news_stories(pages)) == 1
+
+
+class TestCrawlRoundPlans:
+    """A crawl round runs Python tasks only for UDF work. Driver-built
+    tables (budgets, robots rules, list-bootstrap state, empty state
+    reads) are JVM local relations, so no executed plan scans a Python
+    RDD (``applySchemaToPythonRDD``), whose every scan is a Python task
+    that only unpickles rows. The candidate chain crosses the Python
+    boundary once — the extraction ``MapInPandas``, which also emits
+    the host keys — before the bloom probe. Both probe/merge regimes."""
+
+    _PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython",
+                     "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas",
+                     "MapInPandas", "MapInArrow")
+
+    @pytest.fixture(scope="class", params=["mirror", "cogroup"])
+    def round_executions(self, request, spark, pages_parquet,
+                         tmp_path_factory):
+        from nipper_spark.crawl.frontier import FrontierEngine
+        from nipper_spark.crawl.politeness import CrawlPolicy
+        pages = spark.read.parquet(pages_parquet)
+        seeds = [(r["url"], 1.0)
+                 for r in pages.orderBy("url").limit(3).collect()]
+        pol = CrawlPolicy(
+            default_tokens=6, host_tokens={"host00.test": 3},
+            robots_disallow={"host03.test": ["/page/3"]}, n_buckets=4,
+            broadcast_bloom_bytes=(64 << 20 if request.param == "mirror"
+                                   else 0))
+        eng = FrontierEngine(spark, pages,
+                             str(tmp_path_factory.mktemp("plans_crawl")),
+                             pol)
+        eng.bootstrap(seeds)
+        after = max((e for e, _, _ in sql_executions(spark)), default=-1)
+        eng.run_round(0)
+        eng.run_round(1, known_nonempty=True)
+        return request.param, sql_executions(spark, after)
+
+    def test_no_python_rdd_scans(self, round_executions):
+        _, execs = round_executions
+        assert len(execs) > 10
+        for eid, desc, plan in execs:
+            assert "applySchemaToPythonRDD" not in plan, (eid, desc, plan)
+
+    def test_candidate_chain_crosses_python_once(self, spark,
+                                                 round_executions):
+        regime, execs = round_executions
+        probe = "ArrowEvalPython" if regime == "mirror" \
+            else "FlatMapCoGroupsInPandas"
+        chains = 0
+        for eid, desc, _ in execs:
+            if not desc.endswith("fetch+extract+probe+antijoin"):
+                continue
+            names, children = plan_graph(spark, eid)
+            for pid in [i for i, n in names.items() if n == probe]:
+                below, todo = [], list(children.get(pid, []))
+                while todo:
+                    i = todo.pop()
+                    below.append(names.get(i, ""))
+                    todo.extend(children.get(i, []))
+                python = [n for n in below if n in self._PYTHON_NODES]
+                # the cached candidates appear once per union branch;
+                # the graph may draw the second copy through a reused
+                # exchange — each copy holds at most the one crossing
+                assert python in ([], ["MapInPandas"]), (eid, python)
+                chains += python == ["MapInPandas"]
+        assert chains >= 2, "one full candidate chain per round"
 
 
 class TestCandidateShuffleVolume:

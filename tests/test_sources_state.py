@@ -194,3 +194,19 @@ class TestCompaction:
             "seen", 4, SEEN_SCHEMA).collect()}
         assert after == before          # nothing lost
         assert not os.path.isdir(staging)  # partial copy discarded
+
+
+def test_reference_page_resolves_in_one_place(tmp_path, monkeypatch):
+    """The reference-fixture path honours NIPPER_REFERENCE_PAGES, and
+    an absent fixture fails with the one-line reason (the loaders never
+    skip or substitute)."""
+    from nipper_spark.sources.synthetic import (
+        ReferenceFixturesMissing, fixture_pages_rows, reference_page)
+    (tmp_path / "page.html").write_text("<p>x</p>")
+    monkeypatch.setenv("NIPPER_REFERENCE_PAGES", str(tmp_path))
+    assert reference_page() == str(tmp_path)
+    assert reference_page("page.html") == str(tmp_path / "page.html")
+    missing = tmp_path / "hacker_news.html"  # first in load order
+    with pytest.raises(ReferenceFixturesMissing) as e:
+        fixture_pages_rows()
+    assert str(e.value) == f"reference fixtures absent at {missing}"

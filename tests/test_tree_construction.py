@@ -269,9 +269,10 @@ def test_reference_pages_reparse_stable():
     """serialize∘parse is a fixpoint on every real reference page —
     the whole-document analog of the fragment goldens."""
     import os
-    for fname in os.listdir("/root/reference/test-pages"):
-        html = open(f"/root/reference/test-pages/{fname}",
-                    encoding="utf-8").read()
+
+    from nipper_spark.sources.synthetic import reference_page
+    for fname in os.listdir(reference_page()):
+        html = open(reference_page(fname), encoding="utf-8").read()
         a1 = parse_document(html)
         out1 = serialize(a1, 0, include_node=True)
         a2 = parse_document(out1)

@@ -64,8 +64,9 @@ def main() -> int:
         formatted_plan(extract_pages(pages))))
 
     # 2. frontier fetch join
-    wave = spark.createDataFrame(
-        [(f"http://host00.test/page/{i}",) for i in range(10)],
+    from nipper_spark.crawl.state import local_table
+    wave = local_table(
+        spark, [(f"http://host00.test/page/{i}",) for i in range(10)],
         "url string")
     fetched = spark.read.parquet(pdir).join(F.broadcast(wave), "url") \
         .select("url", "html")
@@ -73,18 +74,21 @@ def main() -> int:
         "Frontier fetch (pages ⋈ wave)",
         "The budget-bounded wave is broadcast; the big pages scan is "
         "NEVER shuffled (`BroadcastHashJoin`, no "
-        "`Exchange hashpartitioning(url…)` on the pages side).",
+        "`Exchange hashpartitioning(url…)` on the pages side). "
+        "A driver-held table is a JVM local relation "
+        "(`LocalTableScan`), so broadcasting it runs no Python task.",
         formatted_plan(fetched)))
 
     # 2b. robots decision join (RFC 9309 rules as data)
-    from nipper_spark.crawl.politeness import CrawlPolicy, robots_filter
-    cand = spark.createDataFrame(
+    from nipper_spark.crawl.politeness import (
+        CrawlPolicy, robots_filter, rules_df_from_policy)
+    cand = local_table(
+        spark,
         [(f"http://h{i}.test/p/{i}", f"h{i}.test") for i in range(8)],
         "url string, host string")
-    rules = spark.createDataFrame(
-        [(f"h{i}.test", "/p/", False) for i in range(4)]
-        + [("h0.test", "/p/0*", True)],
-        "host string, prefix string, allow boolean")
+    rules = rules_df_from_policy(spark, CrawlPolicy(
+        robots_disallow={f"h{i}.test": ["/p/"] for i in range(4)},
+        robots_allow={"h0.test": ["/p/0*"]}))
     sections.append((
         "Robots filter (RFC 9309 decision join over the rules table)",
         "Robots rules live in DATA: LEFT JOIN on host equality + "
@@ -94,7 +98,9 @@ def main() -> int:
         "matching rule of each kind — allowed iff no disallow matched "
         "or the longest allow >= longest disallow. Plan size is O(1) "
         "in rule count; a literal expression over the rule set would "
-        "grow the Catalyst tree linearly — fatal at 10^5+ hosts.",
+        "grow the Catalyst tree linearly — fatal at 10^5+ hosts. "
+        "Config-dict rules become the table once, as a JVM local "
+        "relation (`LocalTableScan`): no Python task per round.",
         formatted_plan(robots_filter(cand, CrawlPolicy(), rules=rules,
                                      rules_rows=None))))
 
