@@ -24,7 +24,6 @@ rebuild would re-create them anyway).
 from __future__ import annotations
 
 import hashlib
-import math
 
 import numpy as np
 
@@ -121,9 +120,3 @@ def bloom_might_contain(payload: bytes, urls, k: int = DEFAULT_K) -> np.ndarray:
     probes = (bits[(idx >> np.uint64(3)).astype(np.int64)]
               >> (idx & np.uint64(7)).astype(np.uint8)) & 1
     return probes.all(axis=1)
-
-
-def expected_fp_rate(n_items: int, m_bits: int, k: int = DEFAULT_K) -> float:
-    if m_bits == 0:
-        return 1.0
-    return (1.0 - math.exp(-k * n_items / m_bits)) ** k

@@ -140,33 +140,17 @@ class FrontierEngine:
         else:
             self._rules_rows = rules.count()
             self._round_rules = rules
-        # in-memory twins of COMMITTED state tables, keyed by round:
-        # round r+1's read of a table this engine instance just wrote
-        # (and committed) reuses the localCheckpoint blocks backing the
-        # write instead of re-listing/scanning the parquet it produced
-        # one second ago. The parquet stays the sole authority — the
-        # carry is set only after the write succeeded AND the round
-        # committed, and bootstrap/resume clear it, so any replay or a
-        # fresh engine reads disk. Content is identical by construction
-        # (the write job consumed exactly these checkpoint blocks).
-        self._carry: dict[str, tuple[int, DataFrame]] = {}
         # driver mirror of the bloom/cuckoo state, (round, {bucket:
         # (payload, n_items)}), maintained only while the total payload
         # bytes stay under policy.broadcast_bloom_bytes: the per-round
         # probe/merge then broadcast the payloads instead of exchanging
         # candidates AND state by bucket (two exchanges + a cogroup
         # stage). Established at list-bootstrap (payloads are built on
-        # the driver there anyway), refreshed from the written state
+        # the driver there anyway), refreshed from the committed parquet
         # after each commit, dropped on resume/df-bootstrap or when the
         # size guard trips — the cogroup path is always the fallback
         # and stays oracle-pinned by the forced-thresholds crawl test.
         self._bloom_driver: tuple[int, dict] | None = None
-
-    def _read_state(self, table: str, r: int, schema: str) -> DataFrame:
-        c = self._carry.get(table)
-        if c is not None and c[0] == r:
-            return c[1]
-        return self.state.read(table, r, schema)
 
     # ------------------------------------------------------------------
     def bootstrap(self, seeds: list[tuple[str, float]]) -> None:
@@ -214,12 +198,10 @@ class FrontierEngine:
             taken.add(canon)
             rows.append((canon, host, host_bucket(host, pol.n_buckets),
                          0, float(score), 0))
-        self._carry.clear()
         self._bloom_driver = None
         frontier = (local_table(self.spark, rows, FRONTIER_SCHEMA)
                     .repartition(pol.n_buckets, "host_bucket")
-                    .sortWithinPartitions("depth", F.desc("score"), "url")
-                    .localCheckpoint(eager=False))
+                    .sortWithinPartitions("depth", F.desc("score"), "url"))
         self.state.write("frontier", 0, frontier)
         seen = local_table(
             self.spark,
@@ -241,8 +223,6 @@ class FrontierEngine:
         bloom_df = local_table(self.spark, payloads, BLOOM_SCHEMA)
         self.state.write("bloom", 0, bloom_df)
         self.state.commit_round(-1)
-        self._carry["frontier"] = (0, frontier)
-        self._carry["bloom"] = (0, bloom_df)
         if sum(len(p) for _, p, _ in payloads) <= \
                 pol.broadcast_bloom_bytes:
             self._bloom_driver = (0, {int(b): (bytes(p), int(n))
@@ -262,7 +242,6 @@ class FrontierEngine:
         bloom/cuckoo payloads build in the same cogroup kernel that
         merges them every round."""
         pol = self.policy
-        self._carry.clear()
         self._bloom_driver = None
         seeds = (seed_frontier
                  .groupBy("url")
@@ -294,7 +273,6 @@ class FrontierEngine:
     def resume_round(self) -> int:
         """Next round to run; cleans any uncommitted partial writes and
         finishes any crash-interrupted compaction."""
-        self._carry.clear()  # replay reads the committed parquet only
         self._bloom_driver = None
         self.state.recover_compaction()
         last = self.state.last_committed_round()
@@ -314,20 +292,22 @@ class FrontierEngine:
         per-round fixed latency stays flat as cluster size grows. A
         round of the ``crawl`` benchmark (perfbench/README.md) runs 23
         Spark jobs (traced median, local[3] on a 4-CPU box): the state
-        writes and their checkpoint materializations, the wave, the
-        fetch→extract→probe chain, the counters, the bloom mirror
-        refresh and the compaction. Driver-held tables are JVM local
-        relations, so the round's only Python tasks are the extraction
-        crossing and the bloom probe/merge. ``known_nonempty``
-        skips the emptiness probe job when the caller already proved it
-        (previous round's frontier_next > 0)."""
+        writes, the wave, the fetch→extract→probe chain, the counters,
+        the bloom mirror refresh and the compaction. Every round reads
+        its committed state (frontier, bloom, seen) back from the
+        parquet authority, so losing executors between rounds costs no
+        state. Driver-held tables are JVM local relations, so the
+        round's only Python tasks are the extraction crossing and the
+        bloom probe/merge. ``known_nonempty`` skips the emptiness probe
+        job when the caller already proved it (previous round's
+        frontier_next > 0)."""
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark.sql import Observation
 
         st, pol = self.state, self.policy
         stats = RoundStats(round=r)
-        frontier = self._read_state("frontier", r, FRONTIER_SCHEMA)
+        frontier = st.read("frontier", r, FRONTIER_SCHEMA)
 
         # every adaptive decision this round (plain window vs two-phase
         # seq; broadcast vs shuffle joins of the wave) keys off one
@@ -462,7 +442,7 @@ class FrontierEngine:
             # - above the guard (10^10-URL regime): bucket-cogrouped
             #   probe, state and candidates sharing the host_bucket
             #   partitioning.
-            bloom_df = self._read_state("bloom", r, BLOOM_SCHEMA)
+            bloom_df = st.read("bloom", r, BLOOM_SCHEMA)
             bdrv = self._bloom_driver \
                 if self._bloom_driver is not None \
                 and self._bloom_driver[0] == r else None
@@ -517,18 +497,13 @@ class FrontierEngine:
                 obs_residual, F.count(F.lit(1)).alias("n"))
             # the frontier IS the priority queue: host-bucketed files,
             # each internally (depth, -score, url)-ordered, so the next
-            # round's per-host top-k scans presorted bucket-local data.
-            # Lazy localCheckpoint: the write job below materializes the
-            # blocks, and round r+1's frontier read then reuses them via
-            # the carry (set only after commit) instead of re-scanning
-            # the parquet this round just wrote
+            # round's per-host top-k scans presorted bucket-local data
             next_frontier = (residual.unionByName(
                 fresh.select("url", "host", "host_bucket", "depth",
                              "score",
                              F.lit(r + 1).alias("discovered_round")))
                 .repartition(pol.n_buckets, "host_bucket")
-                .sortWithinPartitions("depth", F.desc("score"), "url")
-                .localCheckpoint(eager=False))
+                .sortWithinPartitions("depth", F.desc("score"), "url"))
 
             # ONE collect over the checkpointed fresh delta yields the
             # per-bucket counters AND the total (their sum). The
@@ -558,7 +533,7 @@ class FrontierEngine:
             if bdrv is not None:
                 # buckets that received fresh keys merge against the
                 # broadcast payloads (one exchange: the fresh groupBy);
-                # untouched buckets echo their carried rows — the same
+                # untouched buckets echo their committed rows — the same
                 # one-row-per-present-bucket output the cogroup produces
                 touched = [int(b) for b, _ in per_bucket]
                 merged = (fresh.groupBy("host_bucket")
@@ -569,23 +544,18 @@ class FrontierEngine:
                 untouched = bloom_df.filter(
                     ~F.col("host_bucket").isin(touched)) if touched \
                     else bloom_df
-                new_bloom = merged.unionByName(untouched) \
-                    .localCheckpoint(eager=False)
                 # the mirror refresh needs the new state's total payload
                 # size BEFORE it collects anything: it rides the bloom
-                # write (the job that materializes the checkpoint) as an
-                # Observation
+                # write as an Observation
                 obs_bloom = Observation()
-                bloom_write = new_bloom.observe(
+                new_bloom = merged.unionByName(untouched).observe(
                     obs_bloom, F.sum(F.length("payload")).alias("bytes"))
             else:
                 new_bloom = (fresh.groupBy("host_bucket")
                              .cogroup(bloom_df.groupBy("host_bucket"))
                              .applyInPandas(
                                  _make_merge_fn(pol.filter_kind),
-                                 schema=BLOOM_SCHEMA)
-                             .localCheckpoint(eager=False))
-                bloom_write = new_bloom
+                                 schema=BLOOM_SCHEMA))
             # the seen table is sharded by host bucket like every other
             # state table: one file per bucket per round instead of one
             # per fresh-delta partition — the cumulative anti-join scan
@@ -599,7 +569,7 @@ class FrontierEngine:
                 w_frontier = ex.submit(st.write, "frontier", r + 1,
                                        next_frontier)
                 w_seen = ex.submit(st.write, "seen", r + 1, seen_delta)
-                w_bloom = ex.submit(st.write, "bloom", r + 1, bloom_write)
+                w_bloom = ex.submit(st.write, "bloom", r + 1, new_bloom)
                 w_frontier.result()  # residual observation resolves here
                 stats.residual = _obs_long(obs_residual, "n",
                                            residual.count)
@@ -611,12 +581,8 @@ class FrontierEngine:
                 w_bloom.result()
             sched_write.result()
             st.commit_round(r)
-            # committed: round r+1 may reuse the materialized twins
-            self._carry["frontier"] = (r + 1, next_frontier)
-            self._carry["bloom"] = (r + 1, new_bloom)
             if bdrv is not None:
-                self._bloom_driver = self._refresh_mirror(
-                    r + 1, new_bloom, obs_bloom)
+                self._bloom_driver = self._refresh_mirror(r + 1, obs_bloom)
         finally:
             _sc.setJobDescription(None)
             sched_pool.shutdown(wait=True)
@@ -636,7 +602,7 @@ class FrontierEngine:
         and bloom state carry over unchanged, the seen delta is
         empty."""
         st = self.state
-        bloom_df = self._read_state("bloom", r, BLOOM_SCHEMA)
+        bloom_df = st.read("bloom", r, BLOOM_SCHEMA)
         st.write("schedule", r, schedule)
         st.write("frontier", r + 1, frontier)
         st.write("seen", r + 1, local_table(self.spark, [], SEEN_SCHEMA))
@@ -644,32 +610,31 @@ class FrontierEngine:
         st.write_rows("round_log", r, self._log_rows(r, stats, []),
                       ROUND_LOG_SCHEMA)
         st.commit_round(r)
-        self._carry["frontier"] = (r + 1, frontier)
-        self._carry["bloom"] = (r + 1, bloom_df)
         if self._bloom_driver is not None and self._bloom_driver[0] == r:
             self._bloom_driver = (r + 1, self._bloom_driver[1])
         return stats
 
-    def _refresh_mirror(self, r: int, new_bloom: DataFrame,
-                        obs_bloom) -> tuple[int, dict] | None:
-        """The driver mirror for round ``r`` from the just-written bloom
-        state, or None (demote to the cogroup path). The size guard is
+    def _refresh_mirror(self, r: int, obs_bloom) -> tuple[int, dict] | None:
+        """The driver mirror for round ``r`` from its committed bloom
+        parquet, or None (demote to the cogroup path). The size guard is
         checked BEFORE anything is collected: the total payload size
         rode the bloom write as an Observation (a missing or null metric
-        costs one tiny aggregate over the checkpoint blocks instead of
-        passing unchecked), and only a state under
-        ``broadcast_bloom_bytes`` is collected. A failure here only
+        costs one tiny aggregate over the parquet instead of passing
+        unchecked), and only a state under ``broadcast_bloom_bytes`` is
+        collected. It reads the parquet, not the plan that wrote it,
+        which would run the merge UDF again. A failure here only
         demotes — the mirror is an optimization, never the authority."""
         try:
+            bloom = self.state.read("bloom", r, BLOOM_SCHEMA)
             total = obs_bloom.get.get("bytes")
             if total is None:
-                total = new_bloom.agg(F.sum(F.length("payload"))) \
+                total = bloom.agg(F.sum(F.length("payload"))) \
                     .first()[0] or 0
             if total > self.policy.broadcast_bloom_bytes:
                 return None
             return (r, {int(row["host_bucket"]):
                         (bytes(row["payload"]), int(row["n_items"]))
-                        for row in new_bloom.collect()})
+                        for row in bloom.collect()})
         except Exception:  # noqa: BLE001 — optimization mirror only
             return None
 
@@ -815,16 +780,37 @@ def _crawl_extract(fetched: DataFrame, n_buckets: int,
 # cogrouped pandas kernels (bucket-local: one host bucket per call)
 # ----------------------------------------------------------------------
 
-def _broadcast_probe_udf(bc_payloads, filter_kind: str):
-    """Column-UDF twin of `_make_probe_fn` for the driver-mirrored
-    regime: payloads arrive via broadcast, candidates stay in place (no
-    bucket exchange). Same kernels, same False-means-definitely-unseen
-    contract; an absent bucket has no keys, so every probe is False."""
-    def _probe_bucket(payload: bytes, urls: list):
-        if filter_kind == "cuckoo":
-            return CK.cuckoo_might_contain(payload, urls)
-        return B.bloom_might_contain(payload, urls)
+def _might_contain(payload: bytes, urls: list, kind: str):
+    """Probe one bucket's payload (bloom or cuckoo, same contract:
+    False = definitely unseen; never a false negative)."""
+    if kind == "cuckoo":
+        return CK.cuckoo_might_contain(payload, urls)
+    return B.bloom_might_contain(payload, urls)
 
+
+def _merge_payload(payload: bytes | None, n_old: int, urls: list,
+                   kind: str) -> tuple[bytes, int]:
+    """One bucket's ``(payload, n_items)`` after inserting ``urls``
+    (bloom OR-in / cuckoo insert); a None payload builds a new one."""
+    if kind == "cuckoo":
+        new = CK.cuckoo_add(payload, urls,
+                            n_items_hint=max(len(urls) * 4, 1024))
+    elif payload is not None:
+        new = B.bloom_add(payload, urls, len(payload) * 8)
+    else:
+        new = B.bloom_build(urls, B.bloom_sizing(max(len(urls) * 4, 1024)))
+    return new, n_old + len(urls)
+
+
+def _bloom_row(bucket: int, payload: bytes, n_items: int) -> pd.DataFrame:
+    return pd.DataFrame({"host_bucket": [bucket], "payload": [payload],
+                         "n_items": [n_items]})
+
+
+def _broadcast_probe_udf(bc_payloads, filter_kind: str):
+    """Column-UDF probe for the driver-mirrored regime: payloads arrive
+    via broadcast, candidates stay in place (no bucket exchange). An
+    absent bucket has no keys, so every probe is False."""
     import numpy as np
 
     @F.pandas_udf("boolean")
@@ -838,74 +824,48 @@ def _broadcast_probe_udf(bc_payloads, filter_kind: str):
                 if ent is None:
                     continue
                 idx = np.nonzero(b_arr == b)[0]
-                out[idx] = _probe_bucket(ent[0],
-                                         [url.iat[i] for i in idx])
+                out[idx] = _might_contain(ent[0], [url.iat[i] for i in idx],
+                                          filter_kind)
         return pd.Series(out)
 
     return _probe
 
 
 def _make_broadcast_merge_fn(bc_payloads, filter_kind: str):
-    """Grouped twin of `_make_merge_fn`'s fresh-side branches for the
-    driver-mirrored regime: the old payload comes from the broadcast
-    dict instead of the cogrouped state rows (bloom-only buckets are
-    echoed by the caller's union, exactly the rows the cogroup would
-    emit). Same build/insert kernels, same n_items accounting."""
+    """Grouped merge for the driver-mirrored regime: the old payload
+    comes from the broadcast dict instead of cogrouped state rows
+    (bloom-only buckets are echoed by the caller's union, exactly the
+    rows the cogroup would emit)."""
     def _merge(fresh: pd.DataFrame) -> pd.DataFrame:
         bucket = int(fresh["host_bucket"].iloc[0])
-        urls = list(fresh["url"])
-        ent = bc_payloads.value.get(bucket)
-        payload, n_old = (ent if ent is not None else (None, 0))
-        if filter_kind == "cuckoo":
-            new = CK.cuckoo_add(payload, urls,
-                                n_items_hint=max(len(urls) * 4, 1024))
-        elif payload is not None:
-            new = B.bloom_add(payload, urls, len(payload) * 8)
-        else:
-            new = B.bloom_build(urls, B.bloom_sizing(max(len(urls) * 4,
-                                                         1024)))
-        return pd.DataFrame({"host_bucket": [bucket], "payload": [new],
-                             "n_items": [n_old + len(urls)]})
+        payload, n_old = bc_payloads.value.get(bucket, (None, 0))
+        return _bloom_row(bucket, *_merge_payload(
+            payload, n_old, list(fresh["url"]), filter_kind))
     return _merge
 
 
 def _make_probe_fn(filter_kind: str):
-    """Bucket-local prefilter probe (bloom or cuckoo payloads, same
-    contract: False = definitely unseen; never a false negative)."""
+    """Bucket-local cogrouped prefilter probe."""
     def _probe(cand: pd.DataFrame, blooms: pd.DataFrame) -> pd.DataFrame:
         cols = ["url", "depth", "score", "host", "host_bucket", "url_hash"]
         out = cand[cols].copy()
         if len(blooms) == 0 or len(cand) == 0:
             out["bloom_hit"] = pd.Series([False] * len(cand), dtype="bool")
             return out
-        payload = bytes(blooms["payload"].iloc[0])
-        urls = list(cand["url"])
-        if filter_kind == "cuckoo":
-            out["bloom_hit"] = CK.cuckoo_might_contain(payload, urls)
-        else:
-            out["bloom_hit"] = B.bloom_might_contain(payload, urls)
+        out["bloom_hit"] = _might_contain(bytes(blooms["payload"].iloc[0]),
+                                          list(cand["url"]), filter_kind)
         return out
     return _probe
 
 
 def _make_merge_fn(filter_kind: str):
-    """Bucket-local payload |= fresh keys (bloom OR-in / cuckoo insert)."""
+    """Bucket-local cogrouped merge: payload |= fresh keys."""
     def _merge(fresh: pd.DataFrame, blooms: pd.DataFrame) -> pd.DataFrame:
         if len(fresh) == 0:
             # bucket had no fresh keys this round: echo the old payload
             return blooms[["host_bucket", "payload", "n_items"]].head(1)
-        bucket = int(fresh["host_bucket"].iloc[0])
-        urls = list(fresh["url"])
         payload = bytes(blooms["payload"].iloc[0]) if len(blooms) else None
         n_old = int(blooms["n_items"].iloc[0]) if len(blooms) else 0
-        if filter_kind == "cuckoo":
-            new = CK.cuckoo_add(payload, urls,
-                                n_items_hint=max(len(urls) * 4, 1024))
-        elif payload is not None:
-            new = B.bloom_add(payload, urls, len(payload) * 8)
-        else:
-            new = B.bloom_build(urls, B.bloom_sizing(max(len(urls) * 4,
-                                                         1024)))
-        return pd.DataFrame({"host_bucket": [bucket], "payload": [new],
-                             "n_items": [n_old + len(urls)]})
+        return _bloom_row(int(fresh["host_bucket"].iloc[0]), *_merge_payload(
+            payload, n_old, list(fresh["url"]), filter_kind))
     return _merge

@@ -234,13 +234,6 @@ def extract_pages(pages: DataFrame, url_col: str = "url",
     return src.mapInPandas(_extract, schema=EXTRACTED_SCHEMA)
 
 
-def _root_text(doc: Document) -> str:
-    """Extracted text of a page = text() of the root <html> element
-    (pre-order DFS concat of descendant Text nodes — the byte-identity
-    contract; Document.text() itself is "" by reference quirk)."""
-    return doc.body_text()
-
-
 # ----------------------------------------------------------------------
 # row-wise record extraction (the hacker-news pipeline shape):
 # one page → N records via a row selector + per-field chained selects

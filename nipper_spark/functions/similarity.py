@@ -87,8 +87,15 @@ def _hyperplanes(dim: int, n_bits: int, seed: int = 42) -> np.ndarray:
 def lsh_bucket_udf(dim: int, n_bits: int = 16, bands: int = 4,
                    seed: int = 42):
     """array<float> → array<int> of ``bands`` bucket codes (sign-bit LSH,
-    n_bits/bands bits per band). One numpy matmul per Arrow batch."""
+    n_bits/bands bits per band). One numpy matmul per Arrow batch.
+    A code is ``band << 24 | bits``, so a band holds at most 24 bits
+    and there are at most 128 bands: beyond either, codes would wrap in
+    the int32 cast and collide silently."""
     bits_per_band = n_bits // bands
+    if bits_per_band > 24 or bands > 128:
+        raise ValueError(
+            f"lsh_bucket_udf: {bands} bands of {bits_per_band} bits "
+            "overflow the int32 band code (at most 128 bands of 24 bits)")
     planes = _hyperplanes(dim, n_bits, seed)
 
     @F.pandas_udf("array<int>")

@@ -6,8 +6,7 @@ make them assertable in tests:
 - column pruning reaches the parquet scan (`ReadSchema` narrow),
 - predicate pushdown happens before any Python UDF (`PushedFilters`),
 - the fetch join broadcasts the wave (BroadcastHashJoin, pages side
-  never shuffled),
-- whole-stage codegen spans exist around native expressions.
+  never shuffled).
 """
 
 from __future__ import annotations
@@ -56,9 +55,6 @@ def pushed_filters(df: DataFrame) -> list[str]:
 def has_broadcast_hash_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in plan_string(df)
 
-def has_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in plan_string(df)
-
 
 def exchange_input_columns(df: DataFrame) -> list[list[str]]:
     """Column-name lists flowing INTO every Exchange (shuffle) in the
@@ -73,10 +69,6 @@ def exchange_input_columns(df: DataFrame) -> list[list[str]]:
                 if c.strip()]
         out.append(cols)
     return out
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return len(re.findall(r"WholeStageCodegen", plan_string(df)))
 
 
 def python_eval_count(df: DataFrame) -> int:

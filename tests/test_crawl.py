@@ -379,6 +379,35 @@ class TestResume:
                 .read_all_rounds("seen", 64, SEEN_SCHEMA).collect()}
         assert seen == oracle.seen
 
+    def test_lost_blocks_between_rounds(self, spark, pages, oracle, seeds,
+                                        tmp_path_factory):
+        """Fault injection for executor loss between rounds: every
+        persisted block (cached and checkpointed RDDs) is dropped after
+        round 0 commits. Round 1 must read the committed parquet and the
+        crawl must still equal the oracle."""
+        state_dir = str(tmp_path_factory.mktemp("crawl_state_blocks"))
+        eng = FrontierEngine(spark, pages, state_dir, POLICY)
+        eng.bootstrap(seeds)
+        stats0 = eng.run_round(0)
+        sc = spark.sparkContext
+        for rdd in sc._jsc.getPersistentRDDs().values():
+            rdd.unpersist(True)
+        eng.run_round(1, known_nonempty=stats0.frontier_next > 0,
+                      wave_bound=stats0.frontier_next)
+        rest = eng.run(max_rounds=64)
+        pages.unpersist()
+        pages.cache()  # the module fixture is cached again
+
+        scheds = read_engine_schedules(spark, state_dir,
+                                       2 + len(rest) + 1)
+        non_empty = {r: w for r, w in scheds.items() if w}
+        assert len(non_empty) == len(oracle.schedules)
+        for r, wave in enumerate(oracle.schedules):
+            assert non_empty[r] == wave, f"round {r} mismatch"
+        seen = {x["url"] for x in CrawlState(spark, state_dir)
+                .read_all_rounds("seen", 64, SEEN_SCHEMA).collect()}
+        assert seen == oracle.seen
+
 
 class TestBloomMirrorGuard:
     def test_guard_trip_demotes_to_cogroup(self, spark, pages, seeds,

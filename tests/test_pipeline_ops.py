@@ -441,6 +441,35 @@ class TestSimilarity:
         for qid, _ in queries:
             assert (qid, qid) in l
 
+    def test_lsh_band_code_width_is_bounded(self, spark):
+        """A band code is ``band << 24 | bits`` cast to int32: 25 bits
+        per band (or more than 128 bands) would wrap silently, so
+        building the UDF refuses it; at 24 bits the int32 codes equal
+        the unbounded integer computation."""
+        import numpy as np
+        from nipper_spark.functions.similarity import (
+            _hyperplanes, lsh_bucket_udf)
+        with pytest.raises(ValueError, match="overflow"):
+            lsh_bucket_udf(8, n_bits=50, bands=2)
+        with pytest.raises(ValueError, match="overflow"):
+            lsh_bucket_udf(8, n_bits=129, bands=129)
+        vecs = np.random.RandomState(3).normal(size=(64, 8)) \
+            .astype(np.float32)
+        df = spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+            "id long, v array<float>")
+        got = {r["id"]: r["codes"] for r in df.select(
+            "id", lsh_bucket_udf(8, n_bits=48, bands=2)("v")
+            .alias("codes")).collect()}
+        signs = (vecs @ _hyperplanes(8, 48)) > 0
+        for i in range(len(vecs)):
+            assert got[i] == [
+                (b << 24) + sum(1 << j for j in range(24)
+                                if signs[i, b * 24 + j])
+                for b in range(2)]
+        # the 24th bit of a band is exercised, not just the low ones
+        assert any(c[0] >= 1 << 23 for c in got.values())
+
     def test_embedding_near_dup_self(self, spark, emb):
         from nipper_spark.functions.similarity import embedding_near_dup_pairs
         # duplicate a vector under a new id -> must be reported
